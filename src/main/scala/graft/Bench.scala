@@ -1,41 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // NOTE (r19): a session-wide cut of AQE's 1 MB coalesce floor
-      // (minPartitionSize=16k) was A/B-measured and REJECTED: it
-      // parallelized the CPU-dense demux stages (q214 2.5->1.4 s) but
-      // cost the action-latency-bound composed loads more than it saved
-      // (q44 5.9->7.9 s, q198 4.6->6.0 s — more tasks and more output
-      // files per driver action). Demux parallelism comes from explicit
-      // user-specified repartitions in the blob builders instead
-      // (WebQueries.groupedBlobs), which AQE never coalesces; the floor
-      // stays at the default that the load tier prefers. Env override
-      // kept for future A/B runs.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
-      // NOTE (r19): KryoSerializer for the RDD tier (CC/BFS/PageRank
-      // loops) was A/B-measured and REJECTED: -0.2 s net over ten
-      // loop-bound queries, inside noise — local-mode shuffles of these
-      // small Tuple2 frames are not serialization-bound (on a real
-      // cluster with network shuffles Kryo stays the right default; the
-      // measurement only rejects it as a BENCH win).
-      .config("spark.ui.enabled", "false")
-      // static conf, must be set before the session exists: the default
-      // 100-entry generated-class cache thrashes on a 100+-query run (a
-      // single composed load emits >100 codegen units, so even its OWN
-      // second attempt recompiled everything — Janino time, not query time)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-bench")
     // untimed warmup: session/codegen/JIT bootstrap is not query cost —
     // without it the first query absorbs ~5s of one-time initialization
     try {

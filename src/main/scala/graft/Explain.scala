@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspection: prints the formatted physical plan of selected queries
   * (usage: runMain graft.Explain [sfDir] [query ...]; default: headliners).
@@ -13,14 +12,7 @@ object Explain {
         "q21_minhash_signature", "q26_embedding_neardup", "q64_cube",
         "q65_moving_stats", "q55_decontaminate", "q90_cross_corpus",
         "q92_mv_refresh", "q95_anomaly_flags", "q218_crawl_curation")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"==================== $n ====================")

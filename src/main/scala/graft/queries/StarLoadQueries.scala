@@ -144,22 +144,13 @@ object StarLoadQueries {
       .withColumn("model", lit("ModelNew"))
       .withColumn("auction_status", lit("Reserve Not Met"))
     val batch2 = full.filter(key > 26000).unionByName(corrections)
-    // two sequential composed loads. The pipelined variant
-    // (StarLoad.runPipelined — batch 2's dim phase overlapping batch 1's
-    // vehicle+fact tail) measured SLOWER here at both local[8] and
-    // local[32] (13.5s vs 14.9s warm at 32): the composed load is
-    // driver-action-latency bound, and the overlapped phases contend on the
-    // same scheduler instead of using disjoint resources as they would on a
-    // real cluster.
-    // env toggle for A/B-measuring the pipelined micro-batch form under
-    // bench conditions (spec-proven equivalent; see StarLoadSpec) — the
-    // default stays sequential, the measured faster shape in local mode
-    if (sys.env.contains("GRAFT_Q49_PIPELINED"))
-      StarLoad.runPipelined(wh, Seq(batch1, batch2))
-    else {
-      StarLoad.run(wh, batch1)
-      StarLoad.run(wh, batch2)
-    }
+    // two sequential composed loads. Overlapping batch 2's dim phase with
+    // batch 1's vehicle+fact tail measured SLOWER here at both local[8] and
+    // local[32] (14.9 s against 13.5 s sequential, warm at 32): the
+    // composed load is driver-action-latency bound, and the overlapped
+    // phases contend on the same scheduler.
+    StarLoad.run(wh, batch1)
+    StarLoad.run(wh, batch2)
     wh.close() // see q44 — release dim-cache blocks; readBack reads disk
     readBack(wh)
   }

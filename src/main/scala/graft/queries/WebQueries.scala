@@ -1193,7 +1193,7 @@ object WebQueries {
     * walks, record parsing: ~1000x more CPU per byte than relational
     * work) ran on a single core at bench SF (measured: q214's demux
     * stage, 1 task, cpu/wall 1.0). Cutting the session-wide AQE floor
-    * was A/B-rejected (see Bench.scala) — it taxes the action-latency-
+    * was A/B-rejected (see Session.scala) — it taxes the action-latency-
     * bound load tier. A USER-specified repartition is exempt from
     * coalescing, so the fix lives here, where the CPU density is: hash
     * rows to defaultParallelism partitions (cores-derived at any scale,
@@ -1209,11 +1209,11 @@ object WebQueries {
     val n = ds.sparkSession.sparkContext.defaultParallelism
     // INVARIANT (ADVICE r19): the head column IS the value `id` extracts —
     // both extension methods pass tuple._1 and the datasets are tuples whose
-    // first column is that Long. The repartition key (SQL `div`) and the
-    // run splitter (Scala `/`) must also agree, which they only provably do
-    // for non-negative ids — assert both so a future caller that breaks
-    // either invariant fails loudly instead of silently splitting groups
-    // across partitions and emitting duplicate partial groups.
+    // first column is that Long; asserted so a future caller that breaks it
+    // fails loudly instead of silently splitting groups across partitions.
+    // The repartition key (SQL `div`) and the run splitter (Scala `/`) agree
+    // for every sign: both truncate toward zero, and truncated division is
+    // monotone in the id, so each group is one contiguous run of the sort.
     val idCol = ds.columns.head // the Long group-id component
     require(ds.schema.head.dataType == org.apache.spark.sql.types.LongType,
       s"groupRuns: head column `$idCol` must be the LongType group id " +
@@ -1225,10 +1225,7 @@ object WebQueries {
         new Iterator[R] {
           def hasNext: Boolean = buf.hasNext
           def next(): R = {
-            val h = id(buf.head)
-            require(h >= 0, s"groupRuns: negative group-id component $h — " +
-              "SQL div partitioning and Scala / run-splitting diverge there")
-            val g = h / groupSize
+            val g = id(buf.head) / groupSize
             val arr = scala.collection.mutable.ArrayBuffer.empty[T]
             while (buf.hasNext && id(buf.head) / groupSize == g)
               arr += buf.next()

@@ -24,20 +24,10 @@ object StarLoad {
   // dedicated pool, NOT ExecutionContext.global — see graft.util.Exec
   private implicit val ec: ExecutionContext = Exec.loadEc
 
-  /** U3 + P5 + A4 (L:84-107): project the warehouse columns, keep-newest per
-    * auction_id, truncate-load `staging`. Returns the staged frame PERSISTED
-    * (MEMORY_AND_DISK): the write job itself materializes the cache, so the
-    * eleven downstream load steps read memory blocks with no extra
-    * count-to-materialize action and no parquet read-back. Caller unpersists. */
-  def loadStaging(wh: Warehouse, processed: DataFrame): DataFrame = {
-    val deduped = stagedFrame(processed)
-    wh.truncateInsert("staging", deduped)
-    deduped
-  }
-
-  /** The persisted keep-newest staging frame WITHOUT the table write — so
-    * [[run]] can overlap the staging dump with the dim wave (both consume
-    * this frame; nothing in the load reads the staging TABLE back). */
+  /** U3 + P5 + A4 (L:84-107): project the warehouse columns and keep-newest
+    * per auction_id, PERSISTED (MEMORY_AND_DISK) so the eleven load steps
+    * read memory blocks, not the staging table: [[run]] overlaps the staging
+    * dump with the vehicle+fact tail. Caller unpersists. */
   private def stagedFrame(processed: DataFrame): DataFrame =
     Silver.keepNewest(processed.select(Schemas.insertColumns.map(col): _*))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -49,20 +39,15 @@ object StarLoad {
     * dim). Nine per-dim DISTINCT scans of staging become two; the driver
     * action count drops ~20 → ~11. Results are identical to the per-dim
     * chains: each dim's candidate set, key order, and id offsets are
-    * preserved (q44/q49 hash-verified). */
-  private def dimPhase(wh: Warehouse, staging: DataFrame): Unit = {
-    Dims.loadSimpleDimsFused(wh, staging)
-    Dims.loadCompoundDimsFused(wh, staging)
-    ()
-  }
-
-  /** The dim phase under latency-tuned session conf: AQE's per-stage
+    * preserved (q44/q49 hash-verified).
+    *
+    * Run under latency-tuned session conf: AQE's per-stage
     * materialization barrier and a per-core shuffle fan-out only add driver
-    * round-trips to ~20 small actions over bounded deltas with fully static
-    * plans (explicit broadcasts, DISTINCT on tiny key sets) — measured ~20%
-    * of composed-load wall time at sf0.1. Fact-scale stages are NOT run
-    * under this: they keep AQE's runtime skew/broadcast decisions, which DO
-    * matter at warehouse scale. */
+    * round-trips to these small actions over bounded deltas with fully
+    * static plans (explicit broadcasts, DISTINCT on tiny key sets) —
+    * measured ~20% of composed-load wall time at sf0.1. Fact-scale stages
+    * are NOT run under this: they keep AQE's runtime skew/broadcast
+    * decisions, which DO matter at warehouse scale. */
   private def dimPhaseTuned(wh: Warehouse, staging: DataFrame): Unit = {
     val aqeKey = "spark.sql.adaptive.enabled"
     val shufKey = "spark.sql.shuffle.partitions"
@@ -71,7 +56,8 @@ object StarLoad {
     try {
       wh.spark.conf.set(aqeKey, "false")
       wh.spark.conf.set(shufKey, "8")
-      dimPhase(wh, staging)
+      Dims.loadSimpleDimsFused(wh, staging)
+      Dims.loadCompoundDimsFused(wh, staging)
     } finally {
       wh.spark.conf.set(aqeKey, aqeWas)
       wh.spark.conf.set(shufKey, shufWas)
@@ -107,9 +93,9 @@ object StarLoad {
       // the staging TABLE dump (U3 semantics) overlaps the vehicle+fact
       // tail — NOT the dim phase: dimPhaseTuned mutates session conf, and a
       // concurrent write planning inside that window would silently pick up
-      // the latency conf (the race runPipelined documents). The tail never
-      // touches conf, so the overlap is safe here; every load step reads
-      // the materialized frame, never the table.
+      // the latency conf. The tail never touches conf, so the overlap is
+      // safe here; every load step reads the materialized frame, never the
+      // table.
       val stagingWrite = Future(wh.truncateInsert("staging", staging))
       vehicleFactTail(wh, staging)
       Await.result(stagingWrite, Duration.Inf)
@@ -117,52 +103,5 @@ object StarLoad {
       staging.unpersist()
       ()
     }
-  }
-
-  /** PIPELINED incremental loads — the micro-batch form of [[run]]: batch
-    * i+1's staging build and dim phase overlap batch i's vehicle+fact tail.
-    * Legal because the dim phase of batch i+1 depends only on the DIMS as of
-    * batch i (complete before the tail starts), never on batch i's vehicle
-    * or fact writes; the tails themselves stay strictly ordered (vehicle
-    * i+1 reads the table batch i wrote; fact i+1 anti-joins batch i's
-    * rows). Dim appends racing the previous tail's dim READS are safe:
-    * appends commit file-atomically (rename), dims are append-only with
-    * stable ids, and a resolution join against a superset of its load's
-    * dims matches exactly the same rows (keys not in its staging never
-    * join). Staging dumps chain so the table ends as the LAST batch's
-    * staging (U3 truncate semantics).
-    *
-    * Session conf is left untouched: phases from different batches
-    * interleave, so the per-phase latency toggle [[run]] uses would race
-    * with the concurrent tail's plan construction.
-    *
-    * Measured caveat (sf0.1, local[8] and local[32]): sequential [[run]]
-    * calls are FASTER in local mode — the composed load is
-    * driver-action-latency bound and overlapped phases contend on one
-    * scheduler. This path is for real clusters, where a batch's dim wave
-    * (driver-latency bound) and the previous tail (executor bound) use
-    * disjoint resources; q49 uses sequential [[run]]s. */
-  def runPipelined(wh: Warehouse, batches: Seq[DataFrame]): Unit = {
-    StateSeed.ensureSeeded(wh)
-    val staged = batches.map(stagedFrame)
-    try {
-      var prevTail: Future[Unit] = Future.successful(())
-      var stagingWrites: Future[Unit] = Future.successful(())
-      staged.foreach { s =>
-        s.count() // materialize once before fan-out (see run())
-        val prevWrites = stagingWrites
-        stagingWrites = Future {
-          // truncate-inserts share a temp dir — serialize them; final table
-          // state = last batch's staging either way
-          Await.result(prevWrites, Duration.Inf)
-          wh.truncateInsert("staging", s)
-        }
-        dimPhase(wh, s) // overlaps the previous batch's vehicle+fact tail
-        Await.result(prevTail, Duration.Inf)
-        prevTail = Future(vehicleFactTail(wh, s))
-      }
-      Await.result(prevTail, Duration.Inf)
-      Await.result(stagingWrites, Duration.Inf)
-    } finally staged.foreach(_.unpersist())
   }
 }

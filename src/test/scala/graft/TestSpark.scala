@@ -2,17 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole test JVM (forked by sbt). */
+/** One shared session for the whole test JVM (forked by sbt): the entry
+  * points' conf, pinned at 4 cores, with a temporary warehouse. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_tests").toString)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.build("graft-tests", Session.conf(4) :+
+    ("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh_tests").toString))
 }

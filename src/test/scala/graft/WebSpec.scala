@@ -573,4 +573,17 @@ class WebSpec extends AnyFunSuite {
     // U = 3 of 4 concordant -> 7500
     assert(auc(Seq((4L, 1), (2L, 1), (3L, 0), (1L, 0))) == 7500L)
   }
+
+  test("groupedBlobs: negative and positive ids in one Dataset group once each") {
+    import graft.queries.WebQueries.GroupedBlobsOps
+    // SQL `div` (the repartition key) and Scala `/` (the run splitter) both
+    // truncate toward zero, so group 0 spans -7..7 and must arrive whole
+    val ids = (-20L to 20L) ++ Seq(-8L, 0L, 7L) // repeats ride in their group
+    val groups = ids.map(i => (i, s"d$i")).toDS().repartition(3)
+      .groupedBlobs() { (g, members) => (g, members.map(_._1).sorted.toSeq) }
+      .collect().toSeq
+    assert(groups.map(_._1).sorted == groups.map(_._1).distinct.sorted,
+      "a group was emitted more than once")
+    assert(groups.toMap == ids.groupBy(_ / 8L).map { case (g, m) => g -> m.sorted })
+  }
 }
